@@ -350,7 +350,8 @@ def main() -> None:
             # local[8] scaling run must not label its map "cpus": 32
             # (r12 verdict item 4 — metadata-only, but it breaks mover
             # classification between maps taken at different widths)
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS",
+                                       len(os.sched_getaffinity(0)))),
             "host_cpus": os.cpu_count(),
             "wall_sec": round(time.perf_counter() - T_START, 1),
         },

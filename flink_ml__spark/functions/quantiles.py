@@ -104,7 +104,7 @@ def exact_percentiles(df: DataFrame, col: Column | str,
 
     if _estimated_bytes(narrow) <= _SMALL_INPUT_BYTES:
         row = df.agg(F.percentile(
-            c, F.array(*[F.lit(p) for p in ps])).alias("__es")).first()
+            c.cast("double"), F.array(*[F.lit(p) for p in ps])).alias("__es")).first()
         es = row["__es"]
         return None if es is None else [float(v) for v in es]
 

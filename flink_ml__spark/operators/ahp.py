@@ -31,9 +31,13 @@ final merge, so no task ever buffers a whole window's rows — analytic
 window functions would) and the tiny per-window stats tables are
 broadcast-joined back onto the rows; the per-row score is then a single
 codegen projection. A tumbling window holding billions of rows costs
-only O(#windows · #cols) state per task this way. Note the reference
-quirk ``k = 1/ln(#cols)`` in the windowed variant (``OnlineAHP.java:151``)
-vs ``k = 1/ln(#rows)`` in batch AHP (``AHP.java:158``) — both preserved.
+only O(#windows · #cols) state per task this way. The normalize →
+entropy → weight → score expressions (``window_norm``, ``nlogn``,
+``window_score``) are shared with ``streaming.stream_online_ahp``, which
+feeds them per-window stats computed over a buffered window instead.
+Note the reference quirk ``k = 1/ln(#cols)`` in the windowed variant
+(``OnlineAHP.java:151``) vs ``k = 1/ln(#rows)`` in batch AHP
+(``AHP.java:158``) — both preserved.
 """
 
 from __future__ import annotations
@@ -41,7 +45,7 @@ from __future__ import annotations
 import math
 
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_ml__spark.base import (
@@ -227,6 +231,44 @@ class AHP(AlgoOperator, AHPParams):
         return df.withColumn(self.getOutputCol(), score)
 
 
+# -- windowed-AHP math (``OnlineAHP.java:94-172``), shared by the batch
+# ``OnlineAHP`` plan and ``streaming.stream_online_ahp``. Each caller
+# computes the per-window min/max and sums its own way; these build the
+# expressions in between, so both engines run the same arithmetic.
+
+def window_norm(x: Column, mn: Column, mx: Column, indicator: int) -> Column:
+    """Min-max normalize by indicator type (1=positive, 0=negative);
+    max == min gives NULL (non-ANSI x/0), as the reference's NaN."""
+    return (x - mn) / (mx - mn) if indicator == 1 else (mx - x) / (mx - mn)
+
+
+def nlogn(nm: Column) -> Column:
+    """Guarded ``n·ln n`` term of ``T_j = Σ n·ln n``; a 0 or NULL norm
+    contributes 0 (``OnlineAHP.java:138-148``)."""
+    return F.when(nm != 0, nm * F.log(nm)).otherwise(0.0)
+
+
+def window_score(nm: list[Column], s: list[Column], t: list[Column],
+                 ahp_w: list[float]) -> Column:
+    """Per-row score from the row's norms and its window's sums
+    ``S_j = Σ n`` and ``T_j = Σ n·ln n``.
+
+    The entropy Σ p·ln p with p = n/S folds to T/S − ln S because the
+    p==0-guarded terms drop out of both sums. A window whose norms are
+    all NULL (min==max) leaves S NULL while T is 0 — the coalesce
+    reproduces the reference's e_j = 0 there. Redundancy and weights
+    use k = 1/ln(#cols) (``OnlineAHP.java:151``)."""
+    n = len(nm)
+    e = [F.coalesce(t[j] / s[j] - F.log(s[j]), F.lit(0.0)) for j in range(n)]
+    k = 1.0 / math.log(n)
+    d = [1 + k * e[j] for j in range(n)]
+    total = d[0]
+    for dj in d[1:]:
+        total = total + dj
+    weight = [dj / total for dj in d]
+    return sum(nm[j] * weight[j] * F.lit(ahp_w[j]) for j in range(n))
+
+
 class OnlineAHP(AlgoOperator, AHPParams, HasWindows, HasTimeCol):
     """Windowed AHP scoring (``OnlineAHP.java:34-299``).
 
@@ -262,44 +304,22 @@ class OnlineAHP(AlgoOperator, AHPParams, HasWindows, HasTimeCol):
             *[F.min(x[j]).alias(f"__mn_{j}_{uid}") for j in range(n)],
         )
 
-        norm = []
-        for j in range(n):
-            mx, mn = F.col(f"__mx_{j}_{uid}"), F.col(f"__mn_{j}_{uid}")
-            if types[j] == 1:
-                norm.append(((x[j] - mn) / (mx - mn)).alias(f"__nm_{j}_{uid}"))
-            else:
-                norm.append(((mx - x[j]) / (mx - mn)).alias(f"__nm_{j}_{uid}"))
+        norm = [window_norm(x[j], F.col(f"__mn_{j}_{uid}"),
+                            F.col(f"__mx_{j}_{uid}"), types[j])
+                .alias(f"__nm_{j}_{uid}") for j in range(n)]
         normed = df1.join(F.broadcast(stats1), win_col).select("*", *norm)
 
-        # pass 2: per-window column sums S_j and guarded Σ n·ln n; the
-        # entropy Σ p·ln p with p = n/S (``OnlineAHP.java:138-148``)
-        # folds to T/S − ln S because the p==0-guarded terms drop out of
-        # both sums. An all-NULL window (min==max) leaves S NULL while the
-        # guarded terms sum to 0 on both engines — coalesce reproduces
-        # the reference's e_j = 0 there.
+        # pass 2: per-window column sums S_j and guarded Σ n·ln n
         nm = [F.col(f"__nm_{j}_{uid}") for j in range(n)]
         stats2 = normed.groupBy(win_col).agg(
             *[F.sum(nm[j]).alias(f"__s_{j}_{uid}") for j in range(n)],
-            *[F.sum(
-                F.when(nm[j] != 0, nm[j] * F.log(nm[j])).otherwise(0.0)
-            ).alias(f"__t_{j}_{uid}") for j in range(n)],
+            *[F.sum(nlogn(nm[j])).alias(f"__t_{j}_{uid}") for j in range(n)],
         )
 
         out = normed.join(F.broadcast(stats2), win_col)
-        e = [F.coalesce(
-                F.col(f"__t_{j}_{uid}") / F.col(f"__s_{j}_{uid}")
-                - F.log(F.col(f"__s_{j}_{uid}")),
-                F.lit(0.0)) for j in range(n)]
-
-        # redundancy/weights; note k = 1/ln(#cols) (``OnlineAHP.java:151``)
-        k = 1.0 / math.log(n)
-        d = [1 + k * e[j] for j in range(n)]
-        total = d[0]
-        for dj in d[1:]:
-            total = total + dj
-        weight = [dj / total for dj in d]
-
-        score = sum(nm[j] * weight[j] * F.lit(ahp_w[j]) for j in range(n))
+        score = window_score(
+            nm, [F.col(f"__s_{j}_{uid}") for j in range(n)],
+            [F.col(f"__t_{j}_{uid}") for j in range(n)], ahp_w)
         out = out.withColumn(self.getOutputCol(), score)
         # drop exactly the generated helper names — a substring match on
         # the uid could silently swallow a user column

@@ -7,16 +7,16 @@ application with buffering of rows that arrive before their window's model
 
 Spark-first mapping:
 
-* ``stream_online_ahp`` — ``applyInPandasWithState`` keyed by the tumbling
-  window: rows buffer in group state until the watermark passes the window
-  end, then the whole window is scored at once (numpy replica of the
-  per-window math, tested against the batch operator) and emitted in
-  append mode. This is the ``windowAllAndProcess`` contract with
+* ``stream_online_ahp`` — a watermarked ``groupBy(window)`` aggregation
+  that buffers each tumbling window's rows with ``collect_list`` and, in
+  append mode, emits the window once when the watermark passes its end;
+  the window is then scored on the JVM with the batch operator's own
+  expressions. This is the ``windowAllAndProcess`` contract with
   watermark-driven firing — but parallel across windows.
 * ``stream_online_topsis_apply`` — a stream-static broadcast range join
   against the fitted model table: the declarative form of
-  buffer-until-model when the model is available up front. (Full
-  stream-stream model arrival would use the same state pattern as above.)
+  buffer-until-model when the model is available up front
+  (``stream_online_topsis_apply_streams`` joins a model stream instead).
 """
 
 from __future__ import annotations
@@ -29,9 +29,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_ml__spark.operators.ahp import OnlineAHP
+from flink_ml__spark.operators.ahp import (OnlineAHP, nlogn, window_norm,
+                                           window_score)
 from flink_ml__spark.operators.online_topsis import OnlineTopsisModel
-from flink_ml__spark.streaming.score_numpy import score_window_ahp
 
 
 _UNITS_MS = {"millisecond": 1, "second": 1000, "minute": 60_000,
@@ -71,106 +71,62 @@ def stream_online_ahp(stream_df: DataFrame, op: OnlineAHP,
 
     Emits input columns + ``outputCol`` once per closed window (append
     mode). ``op`` must have a tumbling ``windows`` interval set.
+
+    The plan runs on the JVM alone: a watermarked ``groupBy(window)``
+    buffers each window's rows with ``collect_list`` (one state row per
+    open window) and emits the window once, when the watermark passes
+    its end. The window's min/max and sums ``S_j``/``T_j`` are then
+    array higher-order functions over the buffer, the buffer is
+    ``inline``-d back to rows, and one projection scores them with the
+    same expressions as the batch operator (``ahp.window_score``). A
+    row arriving after its window fired is dropped, as Flink drops
+    elements of a window behind the watermark.
     """
     cols, ahp_w = op._prepare()
     types = op.getIndicatorType()
     windows = op.getWindows()
     if windows in (None, "global"):
         raise ValueError("streaming OnlineAHP requires a tumbling window")
-    time_col = op.getTimeCol()
-    out_col = op.getOutputCol()
+    n = len(cols)
+    uid = op.uid[-6:]
+    rows = F.col(f"__rows_{uid}")
+    stat = {tag: [f"__{tag}_{j}_{uid}" for j in range(n)]
+            for tag in ("mn", "mx", "s", "t")}
+    mn, mx, s, t = ([F.col(c) for c in stat[tag]]
+                    for tag in ("mn", "mx", "s", "t"))
 
-    # F.window() would attach a second event-time column (conflicting with
-    # the watermark in the stateful operator); derive the tumbling window
-    # struct with plain epoch arithmetic instead.
-    ival_ms = _interval_ms(windows)
-    ms = F.unix_millis(F.col(time_col))
-    start = (F.floor(ms / ival_ms) * ival_ms).cast("long")
-    win = F.struct(
-        F.timestamp_millis(start).alias("start"),
-        F.timestamp_millis(start + ival_ms).alias("end"))
-    src = (stream_df.withWatermark(time_col, watermark_delay)
-           .withColumn("__win", win))
-    keyed = src.groupBy("__win")
+    def vals(c):
+        return F.transform(rows, lambda r: r[c].cast("double"))
 
-    out_fields = list(stream_df.schema.fields) + [
-        T.StructField(out_col, T.DoubleType())]
-    out_schema = T.StructType(out_fields)
-    # append-only chunked Arrow state: each micro-batch serializes ONLY
-    # its own rows to one Arrow-IPC chunk and appends it — earlier
-    # chunks are carried as opaque bytes and never re-parsed until the
-    # window fires, so per-batch Python work is O(batch), not
-    # O(rows buffered so far) (the previous JSON buffer re-parsed and
-    # re-stringified the whole window every micro-batch)
-    state_schema = T.StructType(
-        [T.StructField("chunks", T.ArrayType(T.BinaryType()))])
-    in_names = [f.name for f in stream_df.schema.fields]
-    # timestamps ride the buffer as int64 nanos: chunk-local Arrow
-    # schemas stay primitive and the fire-time concat cannot upcast
-    ts_names = [f.name for f in stream_df.schema.fields
-                if isinstance(f.dataType,
-                              (T.TimestampType, T.TimestampNTZType))]
+    def norm(r, j):
+        return window_norm(r[cols[j]].cast("double"), mn[j], mx[j], types[j])
 
-    def _chunk_of(pdf: pd.DataFrame) -> bytes:
-        import pyarrow as pa
+    def sum_norm(j):  # skips NULLs and stays NULL on all-NULL, as SUM
+        return F.aggregate(rows, F.lit(None).cast("double"), lambda acc, r:
+                           F.coalesce(acc + norm(r, j), acc, norm(r, j)))
 
-        table = pa.Table.from_pandas(pdf, preserve_index=False)
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as w:
-            w.write_table(table)
-        return sink.getvalue().to_pybytes()
+    def sum_nlogn(j):
+        return F.aggregate(rows, F.lit(0.0),
+                           lambda acc, r: acc + nlogn(norm(r, j)))
 
-    def _frames_of(chunks) -> list[pd.DataFrame]:
-        import pyarrow as pa
-
-        return [pa.ipc.open_stream(c).read_all().to_pandas()
-                for c in chunks]
-
-    session_tz = stream_df.sparkSession.conf.get(
-        "spark.sql.session.timeZone", "UTC")
-
-    def score_fn(key, pdfs: Iterator[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-        wk = key[0]  # struct key arrives as a dict {'start':..,'end':..}
-        win_end = wk["end"] if isinstance(wk, dict) else wk[1]
-        # the key timestamp is session-timezone wall-clock with tzinfo
-        # stripped; naive .timestamp() would reinterpret it as local
-        # UTC and misfire by the tz offset on non-UTC sessions
-        win_end_ms = int(pd.Timestamp(win_end).tz_localize(session_tz)
-                         .timestamp() * 1000)
-        frames = [p for p in pdfs if len(p)]
-        batch = pd.concat(frames, ignore_index=True) if frames else None
-        (chunks,) = state.get if state.exists else ([],)
-        chunks = list(chunks or [])
-        if batch is not None and len(batch):
-            b = batch[in_names].copy()
-            for c in ts_names:
-                b[c] = b[c].astype("int64")  # ns → stable ints
-            chunks.append(_chunk_of(b))
-
-        fire = (state.hasTimedOut
-                or (state.getCurrentWatermarkMs() >= win_end_ms))
-        if fire:
-            state.remove()
-            if not chunks:
-                return
-            data = pd.concat(_frames_of(chunks), ignore_index=True)
-            if not len(data):
-                return
-            scores = score_window_ahp(
-                data[cols].to_numpy(dtype=float), types, ahp_w)
-            data[out_col] = scores
-            for c in ts_names:
-                data[c] = pd.to_datetime(data[c])
-            yield data
-        else:
-            state.update((chunks,))
-            state.setTimeoutTimestamp(win_end_ms)
-            return
-
-    return keyed.applyInPandasWithState(
-        score_fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="append", timeoutConf=GroupStateTimeout.EventTimeTimeout)
+    fired = (stream_df.withWatermark(op.getTimeCol(), watermark_delay)
+             .groupBy(F.window(op.getTimeCol(), windows))
+             .agg(F.collect_list(F.struct(*stream_df.columns))
+                  .alias(f"__rows_{uid}")))
+    # min/max in their own projection, so the sums read them as columns
+    with_minmax = fired.select(
+        rows,
+        *[F.array_min(vals(c)).alias(a) for c, a in zip(cols, stat["mn"])],
+        *[F.array_max(vals(c)).alias(a) for c, a in zip(cols, stat["mx"])])
+    with_sums = with_minmax.select(
+        rows, *mn, *mx,
+        *[sum_norm(j).alias(a) for j, a in enumerate(stat["s"])],
+        *[sum_nlogn(j).alias(a) for j, a in enumerate(stat["t"])])
+    flat = with_sums.select(F.inline(rows), *mn, *mx, *s, *t)
+    nm = [window_norm(F.col(c).cast("double"), mn[j], mx[j], types[j])
+          for j, c in enumerate(cols)]
+    return flat.select(*stream_df.columns,
+                       window_score(nm, s, t, ahp_w).alias(op.getOutputCol()))
 
 
 def stream_exact_dedup(stream_df: DataFrame, time_col: str,

@@ -48,6 +48,21 @@ def test_empty_input_returns_none(spark, force_small, monkeypatch):
     assert exact_percentiles(df, "x", [0.5]) is None
 
 
+
+def test_numeric_string_column_same_on_both_routes(spark, monkeypatch):
+    """Both routes read the column cast to double, so a numeric-string
+    column (unparsable entries become NULL and are ignored) gives the
+    same percentiles whichever route the size estimate picks."""
+    vals = [(str(float(i % 13) / 4),) for i in range(200)] + [
+        ("1e3",), ("-7",), ("n/a",), (None,)]
+    df = spark.createDataFrame(vals, "x string")
+    got = {}
+    for force_small in (True, False):
+        monkeypatch.setattr(
+            quantiles, "_SMALL_INPUT_BYTES", (1 << 62) if force_small else 0)
+        got[force_small] = exact_percentiles(df, "x", GRID)
+    assert got[True] == got[False] == _reference(df, GRID)
+
 def test_large_route_scan_stays_parallel(spark, monkeypatch):
     """The Arrow route must not collapse the scan into the merge task:
     the plan feeding mapInPandas has to carry a round-robin exchange

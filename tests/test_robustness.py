@@ -295,7 +295,7 @@ def test_online_ahp_matches_numpy_replica(spark, data):
     import datetime
 
     from flink_ml__spark.operators.ahp import OnlineAHP, ahp_weight_vector
-    from flink_ml__spark.streaming.score_numpy import score_window_ahp
+    from tests.ahp_numpy import score_window_ahp
 
     base = datetime.datetime(2024, 3, 1)
     rows = [(i, base + datetime.timedelta(days=d), float(a), float(b))

@@ -164,6 +164,101 @@ def test_stream_online_ahp_matches_batch(spark, stream_source):
         assert math.isclose(score, ONLINE_GOLDEN[key], abs_tol=1e-4), key
 
 
+def _stage_files(spark, groups, ddl, src, stage):
+    """Write each row group as one parquet file under ``src``, with
+    mtimes in group order so a ``maxFilesPerTrigger=1`` stream reads
+    one group per trigger, in order."""
+    import glob
+    import os
+
+    for i, rows in enumerate(groups):
+        part = os.path.join(stage, f"p{i}")
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(part)
+        (pq_file,) = glob.glob(os.path.join(part, "part-*.parquet"))
+        dst = os.path.join(src, f"{i:03d}.parquet")
+        shutil.copyfile(pq_file, dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+
+def test_stream_online_ahp_edge_windows_match_batch(spark):
+    """Stream vs batch on edge windows, 1-day windows, 0 s watermark,
+    one file per trigger: a NULL input value (day 1), a constant column
+    (day 2: max == min, norm NULL, entropy coalesced to 0), a
+    single-row window (day 3), an event exactly on a window boundary
+    (day 4 00:00) and a late row for day 1 after day 1 has fired,
+    which must be dropped. Every fired window scores as the batch
+    operator scores the same rows without the late one."""
+    import datetime
+
+    def ts(day, hour):
+        return datetime.datetime(2024, 3, day, hour)
+
+    groups = [
+        [(1, ts(1, 1), 1.0, 4.0), (2, ts(1, 5), None, 2.0),
+         (3, ts(1, 9), 3.0, 7.0), (4, ts(2, 2), 2.0, 5.0),
+         (5, ts(2, 8), 6.0, 5.0), (6, ts(2, 20), 4.0, 5.0)],
+        [(7, ts(3, 12), 5.0, 1.0), (8, ts(4, 0), 2.5, 3.0)],
+        [(9, ts(1, 12), 9.0, 9.0), (10, ts(4, 6), 1.5, 8.0),
+         (11, ts(5, 3), 7.0, 2.0)],
+    ]
+    late, unfired = 9, 11
+    ddl = "id long, ts timestamp, a double, b double"
+    op = (OnlineAHP().setInputCols(["a", "b"])
+          .setJudgmentMatrix([[1.0, 2.0], [0.5, 1.0]])
+          .setIndicatorType([1, 0]).setWindows("1 day")
+          .setTimeCol("ts").setOutputCol("s"))
+    src = tempfile.mkdtemp(prefix="stream_src_edge_")
+    stage = tempfile.mkdtemp(prefix="stream_stage_edge_")
+    try:
+        _stage_files(spark, groups, ddl, src, stage)
+        stream_df = (spark.readStream.schema(ddl)
+                     .option("maxFilesPerTrigger", 1).parquet(src))
+        out = stream_online_ahp(stream_df, op)
+        q = (out.writeStream.format("memory").queryName("ahp_stream_edge")
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(180)
+        assert len(q.recentProgress) >= 3
+        got_df = spark.sql("SELECT * FROM ahp_stream_edge")
+        assert got_df.columns == ["id", "ts", "a", "b", "s"]
+        got = {r["id"]: tuple(r) for r in got_df.collect()}
+
+        kept = [r for g in groups for r in g if r[0] != late]
+        expect = {r["id"]: tuple(r) for r in op.transform(
+            spark.createDataFrame(kept, ddl)).collect()
+            if r["id"] != unfired}
+        assert set(got) == set(expect) == {1, 2, 3, 4, 5, 6, 7, 8, 10}
+        for i, row in expect.items():
+            assert got[i][:4] == row[:4], i
+            if row[4] is None:
+                assert got[i][4] is None, i
+            else:
+                assert math.isclose(got[i][4], row[4], rel_tol=1e-9), i
+        # the edge cases hold, not just the parity
+        assert [got[i][4] is None for i in (2, 4, 5, 6, 7)] == [True] * 5
+        assert None not in [got[i][4] for i in (1, 3, 8, 10)]
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def test_stream_online_ahp_plan_has_no_python_node(spark, stream_source,
+                                                   capsys):
+    """The streaming OnlineAHP plan runs on the JVM: no pandas stateful
+    runner, no Python UDF or Arrow evaluation node."""
+    stream_df, _ = stream_source
+    out = stream_online_ahp(stream_df, _op())
+    q = (out.writeStream.format("memory").queryName("ahp_stream_plan")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    capsys.readouterr()
+    q.explain()
+    plan = capsys.readouterr().out
+    assert "StateStoreSave" in plan and "collect_list" in plan, plan
+    for node in ("FlatMapGroupsInPandasWithState", "Python", "Pandas",
+                 "ArrowEval"):
+        assert node not in plan, node
+
+
 def test_stream_online_topsis_apply_streams(spark):
     """Stream-stream: rows AND models arrive as streams; every row must
     still get the score of the window model covering it (the reference's
